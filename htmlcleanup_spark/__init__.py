@@ -9,3 +9,10 @@ analysis) a 100 TB corpus pipeline needs.
 """
 
 __version__ = "0.1.0"
+
+# Every package kernel imports this module when a Python worker unpickles it,
+# so the worker's per-task zip-directory re-read is guarded from then on
+# (see functions/udf.py).
+from .functions.udf import install_zip_guard
+
+install_zip_guard()

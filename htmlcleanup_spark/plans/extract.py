@@ -46,6 +46,8 @@ from ..sources.pages import read_pages
 
 OUTPUT_DDL = RESULT_DDL
 
+_ARROW_BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
 
 def dedup_latest_by_url(pages: DataFrame) -> DataFrame:
     """Keep the newest crawl per url (Common-Crawl recrawls).
@@ -144,12 +146,6 @@ def run_extract(
         num_partitions = spark.sparkContext.defaultParallelism * 4
     df = partition_for_cascade(df, num_partitions)
 
-    # Cap rows per JVM->Python Arrow batch: the default 10000 rows of
-    # ~0.5 MB pages would put gigabytes in flight per task.  The UDF also
-    # re-chunks by bytes internally (functions/udf.py), but that can only
-    # split batches it has already received.
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-
     rules_bc = spark.sparkContext.broadcast(rules)
     result = df.mapInArrow(make_cascade_fn(rules_bc), RESULT_DDL)
 
@@ -162,15 +158,28 @@ def run_extract(
         F.sum("bytes_out").alias("bytes_out"),
     )
 
+    # Cap rows per JVM->Python Arrow batch: the default 10000 rows of
+    # ~0.5 MB pages would put gigabytes in flight per task.  The UDF also
+    # re-chunks by bytes internally (functions/udf.py), but that can only
+    # split batches it has already received.  The cap is read when the sink
+    # action runs, and the caller's setting is restored after it.
+    caller_batch = spark.conf.get(_ARROW_BATCH_ROWS, None)
+    spark.conf.set(_ARROW_BATCH_ROWS, "256")
     t0 = time.time()
-    if output_table:
-        _merge_into_iceberg(spark, result, output_table)
-    elif output_path and sink == "merge":
-        merge_parquet(spark, result, output_path)
-    elif output_path:
-        _write_parquet_with_lineage(spark, result, output_path)
-    else:
-        result.write.format("noop").mode("overwrite").save()
+    try:
+        if output_table:
+            _merge_into_iceberg(spark, result, output_table)
+        elif output_path and sink == "merge":
+            merge_parquet(spark, result, output_path)
+        elif output_path:
+            _write_parquet_with_lineage(spark, result, output_path)
+        else:
+            result.write.format("noop").mode("overwrite").save()
+    finally:
+        if caller_batch is None:
+            spark.conf.unset(_ARROW_BATCH_ROWS)
+        else:
+            spark.conf.set(_ARROW_BATCH_ROWS, caller_batch)
     wall = time.time() - t0
 
     metrics = dict(obs.get)

@@ -193,3 +193,49 @@ def test_merge_sql_shape():
     assert "ON t.url = s.url" in sql
     assert "WHEN MATCHED THEN UPDATE SET *" in sql
     assert "WHEN NOT MATCHED THEN INSERT *" in sql
+
+
+def test_run_extract_scopes_the_arrow_batch_conf(spark, tmp_path, monkeypatch):
+    """The 256-row Arrow batch cap holds while the sink action runs, and the
+    caller's setting (or its absence) is back afterwards, also when the run
+    raises."""
+    from htmlcleanup_spark.plans import extract
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    pages = synth_pages(spark, 12, seed=3)
+    during = []
+    write = extract._write_parquet_with_lineage
+
+    def recording_write(spark_, result, output_path):
+        during.append(spark_.conf.get(key))
+        write(spark_, result, output_path)
+
+    monkeypatch.setattr(extract, "_write_parquet_with_lineage", recording_write)
+    try:
+        for i, caller in enumerate((None, "1000")):
+            if caller is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, caller)
+            m = run_extract(spark, pages, output_path=str(tmp_path / str(i)),
+                            num_partitions=2)
+            assert m["docs_out"] > 0
+            assert spark.conf.get(key, None) == caller
+        assert during == ["256", "256"]
+
+        def failing_cascade_fn(rules):
+            def kernel(batches):
+                for _ in batches:
+                    raise RuntimeError("injected cascade failure")
+                yield from ()
+
+            return kernel
+
+        monkeypatch.setattr(extract, "make_cascade_fn", failing_cascade_fn)
+        with pytest.raises(Exception, match="injected cascade failure"):
+            run_extract(spark, pages, output_path=str(tmp_path / "failed"),
+                        num_partitions=2)
+        assert during[-1] == "256"
+        assert spark.conf.get(key, None) == "1000"
+    finally:
+        spark.conf.unset(key)
