@@ -29,7 +29,7 @@ from htmlcleanup_spark.functions.text import (
     quality_score,
     token_count,
 )
-from htmlcleanup_spark.functions.udf import RESULT_DDL, make_cascade_fn
+from htmlcleanup_spark.functions.udf import RESULT_DDL, make_cascade_fn, map_rows
 from htmlcleanup_spark.operators import ann, dedup, multimodal
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
@@ -727,8 +727,6 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multimodal.image_meta), and the oracle recomputes format/width/height
     arithmetically from doc_id — an independent check of the byte-level
     header parsing."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         image_meta,
         synth_image_bytes,
@@ -736,18 +734,9 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_image_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    imgs = d.mapInPandas(gen, "doc_id bigint, payload binary")
+    imgs = map_rows(d, lambda i: (synth_image_bytes(i),),
+                    "doc_id bigint, payload binary",
+                    args=("doc_id",), keep=("doc_id",))
     return image_meta(imgs)
 
 
@@ -758,24 +747,13 @@ def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser (operators.pdf.pdf_text, Arrow-batched stateless map) READS the
     text back via the page tree; the oracle re-derives the text purely
     arithmetically from doc_id."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.pdf import pdf_text, synth_pdf_bytes
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_pdf_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    pdfs = d.mapInPandas(gen, "doc_id bigint, payload binary")
+    pdfs = map_rows(d, lambda i: (synth_pdf_bytes(i),),
+                    "doc_id bigint, payload binary",
+                    args=("doc_id",), keep=("doc_id",))
     return pdf_text(pdfs)
 
 
@@ -786,25 +764,14 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     known article bodies; the oracle re-derives the expected main text from
     the page RECIPE in SQL, so the whole segment→score→classify chain is
     value-checked."""
-    import pandas as pd
-
     from htmlcleanup_spark.engine.maincontent import synth_article_html
     from htmlcleanup_spark.operators.content import extract_main_content
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        synth_article_html(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    pages = d.mapInPandas(gen, "doc_id bigint, html string")
+    pages = map_rows(d, lambda i: (synth_article_html(i),),
+                     "doc_id bigint, html string",
+                     args=("doc_id",), keep=("doc_id",))
     return extract_main_content(pages)
 
 
@@ -813,8 +780,6 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sniff (BOM > meta-in-first-1024 > utf-8 trial > cp1252 fallback) over
     pages synthesized in five real encodings; the oracle re-derives the
     decoded text + detected charset arithmetically from doc_id."""
-    import pandas as pd
-
     from htmlcleanup_spark.functions.charset import (
         decode_pages,
         synth_encoded_page,
@@ -822,18 +787,9 @@ def q_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_encoded_page(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    raw = d.mapInPandas(gen, "doc_id bigint, payload binary")
+    raw = map_rows(d, lambda i: (synth_encoded_page(i),),
+                   "doc_id bigint, payload binary",
+                   args=("doc_id",), keep=("doc_id",))
     return decode_pages(raw)
 
 
@@ -1242,8 +1198,6 @@ def q_events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _synth_linked_pages(spark: SparkSession, sf_dir: str):
     """Deterministic link corpus: one synthetic page per documents row,
     anchors pure arithmetic in (doc_id, N) — see operators/links."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.links import (
         synth_base_url,
         synth_linked_html,
@@ -1252,21 +1206,9 @@ def _synth_linked_pages(spark: SparkSession, sf_dir: str):
     d = _docs(spark, sf_dir).select("doc_id")
     n = d.count()
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        synth_linked_html(int(i), n) for i in pdf["doc_id"]
-                    ],
-                    "base_url": [
-                        synth_base_url(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return d.mapInPandas(gen, "doc_id bigint, html string, base_url string")
+    return map_rows(d, lambda i: (synth_linked_html(i, n), synth_base_url(i)),
+                    "doc_id bigint, html string, base_url string",
+                    args=("doc_id",), keep=("doc_id",))
 
 
 def q_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,7 +1238,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one synthetic page per documents row, so the node set IS the
     # doc_id column — taking it from the parquet scan instead of
     # pages.select("doc_id") skips a second full Python synth+parse pass
-    # (mapInPandas defeats column pruning; guide §4.1)
+    # (a Python map defeats column pruning; guide §4.1)
     nodes = _docs(spark, sf_dir).select("doc_id")
     return pagerank(nodes, edges, iterations=5)
 
@@ -1690,8 +1632,6 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-side parser READS them back (multimodal.audio_meta), and the
     oracle recomputes rate/channels/bits/duration/size arithmetically
     from doc_id — the audio twin of q_image_meta."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         audio_meta,
         synth_audio_bytes,
@@ -1699,18 +1639,9 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_audio_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    auds = d.mapInPandas(gen, "doc_id bigint, payload binary")
+    auds = map_rows(d, lambda i: (synth_audio_bytes(i),),
+                    "doc_id bigint, payload binary",
+                    args=("doc_id",), keep=("doc_id",))
     return audio_meta(auds)
 
 
@@ -1722,8 +1653,6 @@ def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     them back (multimodal.video_meta), and the oracle recomputes
     brand/duration/tracks/WxH/size arithmetically from doc_id — the
     video leg of the image/audio/video trio."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         synth_video_bytes,
         video_meta,
@@ -1731,18 +1660,9 @@ def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_video_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    vids = d.mapInPandas(gen, "doc_id bigint, payload binary")
+    vids = map_rows(d, lambda i: (synth_video_bytes(i),),
+                    "doc_id bigint, payload binary",
+                    args=("doc_id",), keep=("doc_id",))
     return video_meta(vids)
 
 
@@ -2934,8 +2854,6 @@ def q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-EXIF JPEG), the Spark-side parser READS them back
     (multimodal.exif_meta, Arrow-batched stateless map), and the
     oracle recomputes every field arithmetically from doc_id."""
-    import pandas as pd
-
     from htmlcleanup_spark.operators.multimodal import (
         exif_meta,
         synth_exif_bytes,
@@ -2943,18 +2861,9 @@ def q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_exif_bytes(int(i)) for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    imgs = d.mapInPandas(gen, "doc_id bigint, payload binary")
+    imgs = map_rows(d, lambda i: (synth_exif_bytes(i),),
+                    "doc_id bigint, payload binary",
+                    args=("doc_id",), keep=("doc_id",))
     return exif_meta(imgs)
 
 

@@ -17,7 +17,7 @@ the public jusText/boilerpipe family:
 
 Pure per-document function — in the Spark plan it occupies the same
 stateless-map slot as the cascade (zero shuffles), exposed via
-Arrow-batched ``mapInPandas`` in ``__spark_entry__.q_main_content``.
+the Arrow row-kernel shell in ``operators.content.extract_main_content``.
 """
 
 from __future__ import annotations

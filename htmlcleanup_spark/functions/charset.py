@@ -10,8 +10,6 @@ WARC → decode → cascade without a bare-utf-8 guess anywhere.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
 # re-exported pure core (kept importable from either layer)
@@ -22,6 +20,7 @@ from ..engine.charset import (  # noqa: F401
     expected_decoded_text,
     synth_encoded_page,
 )
+from .udf import map_rows
 
 DECODE_DDL = "doc_id bigint, text string, charset string, error string"
 
@@ -29,18 +28,8 @@ DECODE_DDL = "doc_id bigint, text string, charset string, error string"
 def decode_pages(df: DataFrame, payload_col: str = "payload",
                  id_col: str = "doc_id") -> DataFrame:
     """binary pages → (text, charset, error)."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                text, cs, err = decode_html(payload)
-                rows.append((int(doc_id), text, cs, err))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "charset", "error"])
-
-    return df.select(id_col, payload_col).mapInPandas(run, DECODE_DDL)
+    return map_rows(df, decode_html, DECODE_DDL, args=(payload_col,),
+                    keep=(id_col,))
 
 
 # the 27 characters Windows-1252 remaps out of the 0x80-0x9F band,
@@ -106,21 +95,12 @@ def nfc_normalize_text(df: DataFrame, text_col: str = "text",
     builtin exists), zero shuffles, pipelined into adjacent stages.
     The DuckDB oracle twin is ``nfc_normalize`` (utf8proc) — both
     implement the same Unicode canonical composition."""
-    import pandas as pd
     import unicodedata
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                text_col: [
-                    None if t is None
-                    else unicodedata.normalize("NFC", t)
-                    for t in pdf[text_col]
-                ],
-            })
+    def nfc(t):
+        return (None if t is None else unicodedata.normalize("NFC", t),)
 
-    return df.select(id_col, text_col).mapInPandas(run, NORMALIZE_DDL)
+    return map_rows(df, nfc, NORMALIZE_DDL, args=(text_col,), keep=(id_col,))
 
 
 def strip_control_chars(text_col: str = "text"):

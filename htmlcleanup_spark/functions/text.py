@@ -1,16 +1,22 @@
 """Text-analysis column functions (training-data pipeline layer).
 
 Everything here is built-in column expressions — JVM-side, codegen-friendly,
-no Python in the hot path — and chosen so a DuckDB oracle can reproduce the
-values exactly (simple splits and arithmetic, no engine-specific regex
-dialects).
+no Python in the hot path — except the per-document quality/repetition
+kernels, which run in the Arrow row-kernel shell (functions/udf).  All of it
+is chosen so a DuckDB oracle can reproduce the values exactly (simple splits
+and arithmetic, no engine-specific regex dialects).
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from math import floor
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .udf import map_rows
 
 # Per-language stopword marker sets (top public stopwords) for the
 # stopword-count language heuristic.  Order within a set is irrelevant;
@@ -212,50 +218,68 @@ def quality_signals(df, text_col: str = "text", id_col: str = "doc_id",
     Columns (ratios floor-quantized to BIGINT at 1e6 — portable across
     engines, see quality_score):
 
-    - ``n_words``: whitespace tokens.
+    - ``n_words``: tokens of ``text.split(" ")``.
     - ``mean_word_len_e6``: total word chars / words.  Texts are
       single-space separated (the corpus contract), so word chars =
-      length - (n_words - 1) in pure column arithmetic.
+      length - (n_words - 1).
     - ``uniq_word_frac_e6``: distinct words / words — low values mean
-      word-level repetition (array_distinct is map-side, no shuffle).
+      word-level repetition.
     - ``top_bigram_frac_e6``: chars covered by the most frequent word
       2-gram / chars — THE Gopher repetition signal; boilerplate and
-      keyword-stuffed pages score high.  Needs real per-doc bigram
-      counts: explode -> count -> per-doc max.  Both aggregations have
-      map-side partial combine and the second carries one row per doc,
-      so the plan is 2 shuffles over the bigram stream plus a 1-row-per-
-      doc join back — the scale-safe shape (never a window over the
-      exploded stream).  Tie-break: max(struct(cnt, bigram)) == SQL
-      ORDER BY cnt DESC, bigram DESC LIMIT 1, deterministic.
+      keyword-stuffed pages score high.  Counted per document in the
+      kernel (:func:`_top_gram_frac_e6`, shared with
+      :func:`repetition_signals`).  Tie-break: max((cnt, bigram)) ==
+      SQL ORDER BY cnt DESC, bigram DESC LIMIT 1, deterministic.
     - ``stopword_frac_e6``: English-marker hits / words (Gopher's
       "has stopwords" rule, as a ratio).
     - ``keep``: the verdict under the thresholds above.
+
+    Plan: every signal depends only on the document's own words, so the
+    whole computation is one per-document Arrow kernel
+    (:func:`_quality_signals_kernel`) — zero shuffles at any scale.
+    Memory: the row-kernel shell (functions/udf) hands the kernel slices
+    of at most ``MAX_BATCH_BYTES`` of text (one larger document gets a
+    call of its own), so a worker holds one slice's words and n-gram
+    counts at a time.
 
     Line-granularity Gopher rules (bullet/ellipsis line fractions) live
     with :func:`~htmlcleanup_spark.operators.dedup.line_dedup`, which owns
     the line model — the documents corpus is single-line by construction.
     """
     id_type = df.schema[id_col].dataType.simpleString()
-    names = [id_col, "n_words", "mean_word_len_e6", "uniq_word_frac_e6",
-             "stopword_frac_e6", "top_bigram_frac_e6", "keep"]
     ddl = (
         "%s %s, n_words int, mean_word_len_e6 long, uniq_word_frac_e6 "
         "long, stopword_frac_e6 long, top_bigram_frac_e6 long, "
         "keep boolean" % (id_col, id_type)
     )
-    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(
+    return map_rows(
+        df,
         _quality_signals_kernel(
             min_words, max_words, min_mean_word_len, max_mean_word_len,
-            max_top_bigram_frac, min_unique_frac, names,
+            max_top_bigram_frac, min_unique_frac,
         ),
-        ddl,
+        ddl, args=(text_col,), keep=(id_col,),
     )
+
+
+def _top_gram_frac_e6(w, n, nc):
+    """Chars covered by the most frequent word ``n``-gram of the words
+    ``w`` / ``nc`` chars, floor-quantized at 1e6 (0 under ``n`` words):
+    floor(((cnt * float(len(gram))) / nc) * 1e6) with the max-(cnt, gram)
+    tie-break — Python tuple order == Spark struct order (long first, then
+    UTF-8 string; UTF-8 byte order equals code-point order)."""
+    if len(w) < n:
+        return 0
+    join = " ".join
+    cnt = Counter(join(w[i:i + n]) for i in range(len(w) - n + 1))
+    c, g = max((c, g) for g, c in cnt.items())
+    return floor(((c * float(len(g))) / nc) * 1e6)
 
 
 def _quality_signals_kernel(min_words, max_words, min_mean_word_len,
                             max_mean_word_len, max_top_bigram_frac,
-                            min_unique_frac, names):
-    """Arrow batch kernel for :func:`quality_signals` — same zero-shuffle
+                            min_unique_frac):
+    """Row kernel for :func:`quality_signals` — same zero-shuffle
     per-document design as _repetition_kernel (every signal depends only
     on the document's own words; the former relational construction paid
     a doc-keyed exchange plus a SortAggregate for the max-(cnt, bigram)
@@ -270,67 +294,29 @@ def _quality_signals_kernel(min_words, max_words, min_mean_word_len,
     t_top = int(max_top_bigram_frac * 1e6)
     t_uniq = int(min_unique_frac * 1e6)
 
-    def fn(batches):
-        from collections import Counter
-
-        from math import floor
-
-        import pyarrow as pa
-
-        for batch in batches:
-            id_arr = batch.column(0)
-            nw_c, mwl_c, uniq_c, stop_c, top_c, keep_c = \
-                [], [], [], [], [], []
-            for t in batch.column(1).to_pylist():
-                if t is None:
-                    nw_c.append(None)
-                    mwl_c.append(None)
-                    uniq_c.append(None)
-                    stop_c.append(None)
-                    top_c.append(0)
-                    keep_c.append(None)
-                    continue
-                w = t.split(" ")
-                nw = len(w)
-                nwd = float(nw)
-                nc = float(len(t))
-                den = nwd if nwd > 1.0 else 1.0
-                mwl = floor(((nc - (nwd - 1.0)) / den) * 1e6)
-                uniq = floor((float(len(set(w))) / den) * 1e6)
-                nstop = 0
-                for x in w:
-                    if x in stops:
-                        nstop += 1
-                stop = floor((float(nstop) / den) * 1e6)
-                if nw < 2:
-                    top = 0
-                else:
-                    join = " ".join
-                    cnt = Counter(
-                        join(w[i:i + 2]) for i in range(nw - 1)
-                    )
-                    bc, bg = max(((c, g) for g, c in cnt.items()))
-                    top = floor(((bc * float(len(bg))) / nc) * 1e6)
-                nw_c.append(nw)
-                mwl_c.append(mwl)
-                uniq_c.append(uniq)
-                stop_c.append(stop)
-                top_c.append(top)
-                keep_c.append(
-                    min_words <= nw <= max_words
-                    and t_mwl_lo <= mwl <= t_mwl_hi
-                    and top <= t_top
-                    and uniq >= t_uniq
-                )
-            yield pa.record_batch(
-                [id_arr, pa.array(nw_c, pa.int32()),
-                 pa.array(mwl_c, pa.int64()),
-                 pa.array(uniq_c, pa.int64()),
-                 pa.array(stop_c, pa.int64()),
-                 pa.array(top_c, pa.int64()),
-                 pa.array(keep_c, pa.bool_())],
-                names=names,
-            )
+    def fn(t):
+        if t is None:
+            return None, None, None, None, 0, None
+        w = t.split(" ")
+        nw = len(w)
+        nwd = float(nw)
+        nc = float(len(t))
+        den = nwd if nwd > 1.0 else 1.0
+        mwl = floor(((nc - (nwd - 1.0)) / den) * 1e6)
+        uniq = floor((float(len(set(w))) / den) * 1e6)
+        nstop = 0
+        for x in w:
+            if x in stops:
+                nstop += 1
+        stop = floor((float(nstop) / den) * 1e6)
+        top = _top_gram_frac_e6(w, 2, nc)
+        keep = (
+            min_words <= nw <= max_words
+            and t_mwl_lo <= mwl <= t_mwl_hi
+            and top <= t_top
+            and uniq >= t_uniq
+        )
+        return nw, mwl, uniq, stop, top, keep
     return fn
 
 
@@ -458,107 +444,65 @@ def repetition_signals(df, text_col: str = "text", id_col: str = "doc_id",
     max_dup_frac = max_dup_frac or {5: 0.15, 10: 0.10}
 
     id_type = df.schema[id_col].dataType.simpleString()
-    names = (
-        [id_col, "n_words"]
-        + ["top%d_frac_e6" % n for n in top_ns]
-        + ["dup%d_frac_e6" % n for n in dup_ns]
-        + ["keep"]
-    )
     ddl = ", ".join(
         ["%s %s" % (id_col, id_type), "n_words int"]
         + ["top%d_frac_e6 long" % n for n in top_ns]
         + ["dup%d_frac_e6 long" % n for n in dup_ns]
         + ["keep boolean"]
     )
-    return df.select(F.col(id_col), F.col(text_col)).mapInArrow(
+    return map_rows(
+        df,
         _repetition_kernel(tuple(top_ns), tuple(dup_ns),
-                           dict(max_top_frac), dict(max_dup_frac), names),
-        ddl,
+                           dict(max_top_frac), dict(max_dup_frac)),
+        ddl, args=(text_col,), keep=(id_col,),
     )
 
 
-def _repetition_kernel(top_ns, dup_ns, max_top_frac, max_dup_frac, names):
-    """Arrow batch kernel for :func:`repetition_signals`.
+def _repetition_kernel(top_ns, dup_ns, max_top_frac, max_dup_frac):
+    """Row kernel for :func:`repetition_signals`.
 
     Faithful to the former relational construction value-for-value:
     words = text.split(" ") (== split(text, ' ', -1) with empty tokens
-    kept); top fraction = floor(((cnt * float(len(gram))) /
-    float(n_chars)) * 1e6) with the max-(cnt, gram) tie-break (Python
-    tuple order == Spark struct order: long first, then UTF8 string —
-    UTF-8 byte order equals code-point order, so str comparison
-    matches); dup fraction = floor((float(|covered positions|) /
+    kept); top fraction = :func:`_top_gram_frac_e6` over
+    float(n_chars); dup fraction = floor((float(|covered positions|) /
     float(n_words)) * 1e6) over the union of occurrence ranges of grams
     appearing >= 2 times.  All arithmetic is the same IEEE-double
     operation sequence, so the e6 integers are bit-identical.  NULL text
     yields (NULL n_words, all-zero fracs, keep=true), matching the
     size(NULL)=NULL + left-join + coalesce(0) path.
     """
-    def fn(batches):
-        from collections import Counter
+    top_thr = {n: int(max_top_frac[n] * 1e6) for n in top_ns}
+    dup_thr = {n: int(max_dup_frac[n] * 1e6) for n in dup_ns}
+    null_row = (None,) + (0,) * (len(top_ns) + len(dup_ns)) + (True,)
 
-        from math import floor
-
-        import pyarrow as pa
-
-        top_thr = {n: int(max_top_frac[n] * 1e6) for n in top_ns}
-        dup_thr = {n: int(max_dup_frac[n] * 1e6) for n in dup_ns}
-        for batch in batches:
-            id_arr = batch.column(0)
-            n_words_c: list = []
-            cols: dict = {n: [] for n in top_ns}
-            dcols: dict = {n: [] for n in dup_ns}
-            keeps: list = []
-            for t in batch.column(1).to_pylist():
-                if t is None:
-                    n_words_c.append(None)
-                    for n in top_ns:
-                        cols[n].append(0)
-                    for n in dup_ns:
-                        dcols[n].append(0)
-                    keeps.append(True)
-                    continue
-                w = t.split(" ")
-                nw = len(w)
-                nc = float(len(t))
-                n_words_c.append(nw)
-                join = " ".join
-                keep = True
-                for n in top_ns:
-                    if nw < n:
-                        v = 0
-                    else:
-                        cnt = Counter(
-                            join(w[i:i + n]) for i in range(nw - n + 1)
-                        )
-                        best_c, best_g = max(
-                            ((c, g) for g, c in cnt.items())
-                        )
-                        v = floor(((best_c * float(len(best_g))) / nc)
-                                  * 1e6)
-                    cols[n].append(v)
-                    keep = keep and v <= top_thr[n]
-                for n in dup_ns:
-                    if nw < n:
-                        v = 0
-                    else:
-                        grams = [join(w[i:i + n])
-                                 for i in range(nw - n + 1)]
-                        cnt = Counter(grams)
-                        cov: set = set()
-                        for i, g in enumerate(grams):
-                            if cnt[g] >= 2:
-                                cov.update(range(i, i + n))
-                        v = floor((float(len(cov)) / float(nw)) * 1e6)
-                    dcols[n].append(v)
-                    keep = keep and v <= dup_thr[n]
-                keeps.append(keep)
-            yield pa.record_batch(
-                [id_arr, pa.array(n_words_c, pa.int32())]
-                + [pa.array(cols[n], pa.int64()) for n in top_ns]
-                + [pa.array(dcols[n], pa.int64()) for n in dup_ns]
-                + [pa.array(keeps, pa.bool_())],
-                names=names,
-            )
+    def fn(t):
+        if t is None:
+            return null_row
+        w = t.split(" ")
+        nw = len(w)
+        nc = float(len(t))
+        join = " ".join
+        row = [nw]
+        keep = True
+        for n in top_ns:
+            v = _top_gram_frac_e6(w, n, nc)
+            row.append(v)
+            keep = keep and v <= top_thr[n]
+        for n in dup_ns:
+            if nw < n:
+                v = 0
+            else:
+                grams = [join(w[i:i + n]) for i in range(nw - n + 1)]
+                cnt = Counter(grams)
+                cov: set = set()
+                for i, g in enumerate(grams):
+                    if cnt[g] >= 2:
+                        cov.update(range(i, i + n))
+                v = floor((float(len(cov)) / float(nw)) * 1e6)
+            row.append(v)
+            keep = keep and v <= dup_thr[n]
+        row.append(keep)
+        return row
     return fn
 
 

@@ -10,11 +10,10 @@ Spark.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
 from ..engine.maincontent import main_content
+from ..functions.udf import map_rows
 
 MAIN_CONTENT_DDL = (
     "doc_id bigint, main_text string, n_blocks int, n_good int, error string"
@@ -23,21 +22,8 @@ MAIN_CONTENT_DDL = (
 
 def extract_main_content(df: DataFrame, html_col: str = "html",
                          id_col: str = "doc_id") -> DataFrame:
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf[id_col], pdf[html_col]):
-                text, nb, ng, err = main_content(html)
-                rows.append((int(doc_id), text, nb, ng, err))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "main_text", "n_blocks", "n_good",
-                         "error"],
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, MAIN_CONTENT_DDL)
+    return map_rows(df, main_content, MAIN_CONTENT_DDL, args=(html_col,),
+                    keep=(id_col,))
 
 
 def page_metadata(df: DataFrame, html_col: str = "html"):

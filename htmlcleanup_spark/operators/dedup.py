@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.udf import map_rows
+
 
 def _drop_hot_buckets(banded: DataFrame, keys: list[str],
                       max_bucket_size: int) -> DataFrame:
@@ -909,7 +911,6 @@ def remove_repeated_spans(df: DataFrame, k: int = 8, min_count: int = 2,
     through unchanged.
     """
     import numpy as np
-    import pandas as pd
 
     ws = F.split(F.col(text_col), " ")
     n = F.size(ws)
@@ -946,30 +947,20 @@ def remove_repeated_spans(df: DataFrame, k: int = 8, min_count: int = 2,
         id_col, df.schema[id_col].dataType.simpleString()
     )
 
-    def cut(batches):
-        for pdf in batches:
-            rows = []
-            for did, text, st in zip(
-                pdf[id_col], pdf[text_col], pdf["_starts"]
-            ):
-                if st is None or len(st) == 0:
-                    rows.append((did, text, 0))
-                    continue
-                toks = text.split(" ")
-                cover = np.zeros(len(toks) + 1, dtype=np.int32)
-                for s in st:
-                    cover[s] += 1
-                    cover[min(s + k, len(toks))] -= 1
-                covered = np.cumsum(cover[:-1]) > 0
-                kept = [t for t, c in zip(toks, covered) if not c]
-                rows.append(
-                    (did, " ".join(kept), int(covered.sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "clean_text", "n_removed"]
-            )
+    def cut(text, st):
+        if st is None or len(st) == 0:
+            return text, 0
+        toks = text.split(" ")
+        cover = np.zeros(len(toks) + 1, dtype=np.int32)
+        for s in st:
+            cover[s] += 1
+            cover[min(s + k, len(toks))] -= 1
+        covered = np.cumsum(cover[:-1]) > 0
+        kept = [t for t, c in zip(toks, covered) if not c]
+        return " ".join(kept), int(covered.sum())
 
-    return withs.mapInPandas(cut, out_ddl)
+    return map_rows(withs, cut, out_ddl, args=(text_col, "_starts"),
+                    keep=(id_col,))
 
 
 def paragraph_minhash_pairs(df: DataFrame, text_col: str = "text",

@@ -2,7 +2,7 @@
 
 Images/audio/video ride through the pipeline as ``binary`` columns with a
 metadata struct.  The Spark-side plumbing (schema, Arrow batching via
-mapInPandas, partition behavior) is real and tested; the *decode* step is a
+the Arrow row-kernel shell, partition behavior) is real and tested; the *decode* step is a
 stub because no image/audio codec libraries exist in this container —
 ``decode_stub=True`` (default) derives deterministic fake features from the
 payload digest, ``decode_stub=False`` raises NotImplementedError where a
@@ -12,11 +12,10 @@ real ``PIL.Image.open`` / ``soundfile.read`` call would go.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..functions.udf import map_rows
 
 FEATURE_DDL = (
     "doc_id bigint, n_bytes bigint, digest string, width int, height int, "
@@ -35,39 +34,28 @@ def _fake_decode(payload: bytes):
 def extract_features(df: DataFrame, payload_col: str = "payload",
                      id_col: str = "doc_id",
                      decode_stub: bool = True) -> DataFrame:
-    """binary payload -> per-item features via Arrow-batched mapInPandas.
+    """binary payload -> per-item features via the Arrow row-kernel shell.
 
-    Batch shape: the UDF sees pandas DataFrames of whole Arrow batches; per
-    element it computes (n_bytes, md5 digest, fake WxH).  Swap `_fake_decode`
-    for a real codec on a cluster with PIL/ffmpeg available.
+    Per element it computes (n_bytes, md5 digest, fake WxH).  Swap
+    `_fake_decode` for a real codec on a cluster with PIL/ffmpeg available.
     """
 
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "real decode needs PIL/soundfile; not in this container"
-                    )
-                w, h = _fake_decode(payload)
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(payload),
-                        hashlib.md5(payload).hexdigest(),
-                        w,
-                        h,
-                        "stub",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_bytes", "digest", "width", "height", "codec"],
+    def fe(payload):
+        payload = payload or b""
+        if not decode_stub:
+            raise NotImplementedError(
+                "real decode needs PIL/soundfile; not in this container"
             )
+        w, h = _fake_decode(payload)
+        return (
+            len(payload),
+            hashlib.md5(payload).hexdigest(),
+            w,
+            h,
+            "stub",
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(fe, FEATURE_DDL)
+    return map_rows(df, fe, FEATURE_DDL, args=(payload_col,), keep=(id_col,))
 
 
 # ---------------------------------------------------------------------------
@@ -150,19 +138,12 @@ def image_meta(df: DataFrame, payload_col: str = "payload",
     feature extraction that IS possible offline — the pixel-level decode
     stays behind extract_features(decode_stub=...)."""
 
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt, w, h = parse_image_header(payload)
-                rows.append((int(doc_id), fmt, w, h, len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "width", "height", "n_bytes"],
-            )
+    def fe(payload):
+        payload = payload or b""
+        return (*parse_image_header(payload), len(payload))
 
-    return df.select(id_col, payload_col).mapInPandas(fe, IMAGE_META_DDL)
+    return map_rows(df, fe, IMAGE_META_DDL, args=(payload_col,),
+                    keep=(id_col,))
 
 
 def synth_image_bytes(i: int) -> bytes:
@@ -283,25 +264,15 @@ def audio_meta(df: DataFrame, payload_col: str = "payload",
     """Per-item audio metadata via Arrow-batched header parsing:
     (doc_id, format, sample_rate, channels, bits, duration_e3,
     n_bytes); NULL fields for unrecognized payloads.  Same plan shape
-    as image_meta: a stateless mapInPandas over whole Arrow batches,
-    zero shuffle, decode stays behind extract_features."""
+    as image_meta: a stateless Arrow-batched row map, zero shuffle,
+    decode stays behind extract_features."""
 
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt, rate, ch, bits, dur = parse_audio_header(payload)
-                rows.append(
-                    (int(doc_id), fmt, rate, ch, bits, dur, len(payload))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "sample_rate", "channels",
-                         "bits", "duration_e3", "n_bytes"],
-            )
+    def fe(payload):
+        payload = payload or b""
+        return (*parse_audio_header(payload), len(payload))
 
-    return df.select(id_col, payload_col).mapInPandas(fe, AUDIO_META_DDL)
+    return map_rows(df, fe, AUDIO_META_DDL, args=(payload_col,),
+                    keep=(id_col,))
 
 
 _WAV_RATES = (8000, 16000, 22050, 44100)
@@ -429,24 +400,14 @@ def video_meta(df: DataFrame, payload_col: str = "payload",
     """Per-item video metadata via Arrow-batched box parsing: (doc_id,
     format, brand, duration_e3, n_tracks, width, height, n_bytes);
     NULL fields for unrecognized payloads.  Same plan shape as
-    image_meta/audio_meta: stateless mapInPandas, zero shuffle."""
+    image_meta/audio_meta: stateless row map, zero shuffle."""
 
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt, brand, dur, nt, w, h = parse_video_header(payload)
-                rows.append(
-                    (int(doc_id), fmt, brand, dur, nt, w, h, len(payload))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "format", "brand", "duration_e3",
-                         "n_tracks", "width", "height", "n_bytes"],
-            )
+    def fe(payload):
+        payload = payload or b""
+        return (*parse_video_header(payload), len(payload))
 
-    return df.select(id_col, payload_col).mapInPandas(fe, VIDEO_META_DDL)
+    return map_rows(df, fe, VIDEO_META_DDL, args=(payload_col,),
+                    keep=(id_col,))
 
 
 _VID_W = (640, 1280, 1920, 320)
@@ -592,20 +553,11 @@ def exif_meta(df: DataFrame, payload_col: str = "payload",
     orientation column is what a training pipeline's rotate-normalize
     step keys on, make/dt the provenance shard keys."""
 
-    def fe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                has, bo, ori, make, dt = parse_exif(payload)
-                rows.append((int(doc_id), has, bo, ori, make, dt))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "has_exif", "byte_order",
-                         "orientation", "make", "dt"],
-            )
+    def fe(payload):
+        return parse_exif(payload or b"")
 
-    return df.select(id_col, payload_col).mapInPandas(fe, EXIF_META_DDL)
+    return map_rows(df, fe, EXIF_META_DDL, args=(payload_col,),
+                    keep=(id_col,))
 
 
 def synth_exif_bytes(i: int) -> bytes:

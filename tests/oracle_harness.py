@@ -74,8 +74,19 @@ def compare(name, spark_pdf, duck_pdf) -> list[str]:
     return problems
 
 
-def main(sf_dir: str, only=None) -> int:
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per sf table present in sf_dir."""
     import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, "%s.parquet" % t)
+        if os.path.exists(path):
+            con.sql("CREATE VIEW %s AS SELECT * FROM '%s'" % (t, path))
+    return con
+
+
+def main(sf_dir: str, only=None) -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
@@ -90,12 +101,7 @@ def main(sf_dir: str, only=None) -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, "%s.parquet" % t)
-        if os.path.exists(path):
-            con.sql("CREATE VIEW %s AS SELECT * FROM '%s'" % (t, path))
-
+    con = connect(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_bad = 0

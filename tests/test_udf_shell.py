@@ -1,5 +1,6 @@
-"""The Arrow shell around the cascade (functions/udf.py): byte-budget slicing
-and the worker's zip-directory guard.
+"""The Arrow row-kernel shell (functions/udf.py): byte-budget slicing, the
+row kernel's schema, pass-through and order contract, and the worker's
+zip-directory guard.
 
 The guard tests count calls to ``zipimport._read_directory``; they never time
 anything.
@@ -8,6 +9,7 @@ anything.
 from __future__ import annotations
 
 import collections
+import datetime
 import importlib
 import os
 import sys
@@ -19,7 +21,12 @@ import pyarrow as pa
 import pytest
 
 from htmlcleanup_spark.functions import udf
-from htmlcleanup_spark.functions.udf import _slice_by_bytes, make_cascade_fn
+from htmlcleanup_spark.functions.udf import (
+    _slice_by_bytes,
+    make_cascade_fn,
+    map_rows,
+    row_kernel,
+)
 
 LAZY_ZIPIMPORT = hasattr(zipimport.zipimporter, "_get_files")
 needs_eager_zipimport = pytest.mark.skipif(
@@ -30,9 +37,13 @@ needs_eager_zipimport = pytest.mark.skipif(
 # _slice_by_bytes
 # ---------------------------------------------------------------------------
 
-def _slices_by_as_py(batch, html_idx, max_batch_bytes):
-    """The sizing rule the Arrow-offset one replaced: copy each page out."""
-    sizes = [len(v.as_py() or b"") for v in batch.column(html_idx)]
+def _slices_by_as_py(batch, idxs, max_batch_bytes):
+    """The sizing rule the Arrow-offset one replaced: copy each value out
+    and add up a row's bytes over the sized columns."""
+    sizes = [0] * batch.num_rows
+    for i in idxs:
+        for r, v in enumerate(batch.column(i).to_pylist()):
+            sizes[r] += len(v.encode() if isinstance(v, str) else v or b"")
     start = acc = 0
     for i, s in enumerate(sizes):
         if acc + s > max_batch_bytes and i > start:
@@ -47,18 +58,135 @@ def _slices_by_as_py(batch, html_idx, max_batch_bytes):
 def test_slice_boundaries_match_the_as_py_rule(budget):
     html = [b"a" * 3, None, b"", b"b" * 70, b"c" * 9, None, b"d" * 200,
             b"", b"e" * 10, b"f", None, b"g" * 64]
+    title = ["é" * 5, "x", None, "", "y" * 40, None, "z", "w" * 90, "",
+             None, "v" * 3, "u"]
     batch = pa.RecordBatch.from_pydict(
-        {"url": [str(i) for i in range(len(html))], "html": html},
-        schema=pa.schema([("url", pa.string()), ("html", pa.binary())]))
-    expected = list(_slices_by_as_py(batch, 1, budget))
-    got = list(_slice_by_bytes(batch, 1, budget))
-    assert [(int(s.column(0)[0].as_py()), s.num_rows) for s in got] == expected
-    assert pa.concat_arrays([s.column(1) for s in got]).equals(batch.column(1))
+        {"url": [str(i) for i in range(len(html))], "html": html,
+         "title": title},
+        schema=pa.schema([("url", pa.string()), ("html", pa.binary()),
+                          ("title", pa.string())]))
+    # the sized columns: the page alone, every string/binary argument of a
+    # row kernel, and none (a kernel of an id)
+    for idxs in ([1], [1, 2], []):
+        expected = list(_slices_by_as_py(batch, idxs, budget))
+        got = list(_slice_by_bytes(batch, idxs, budget))
+        assert [(int(s.column(0)[0].as_py()), s.num_rows)
+                for s in got] == expected
+        assert pa.Table.from_batches(got).equals(pa.Table.from_batches([batch]))
 
 
 def test_slice_of_an_empty_batch_yields_nothing():
     batch = pa.RecordBatch.from_pydict({"html": pa.array([], pa.binary())})
-    assert list(_slice_by_bytes(batch, 0, 10)) == []
+    assert list(_slice_by_bytes(batch, [0], 10)) == []
+    assert list(_slice_by_bytes(batch, [], 10)) == []
+
+
+# ---------------------------------------------------------------------------
+# row_kernel / map_rows (the DDL is parsed by the session's JVM)
+# ---------------------------------------------------------------------------
+
+TS = datetime.datetime(2024, 1, 2, 3, 4, 5, 6, tzinfo=datetime.timezone.utc)
+
+
+@pytest.mark.spark
+def test_output_schema_comes_from_the_ddl(spark):
+    kernel = row_kernel(
+        lambda x: (len(x), x.encode(), TS, [("n", len(x))]),
+        "k int, a bigint, b binary, t timestamp, m map<string,bigint>",
+        args=("x",), keep=("k",))
+    batch = pa.RecordBatch.from_pydict(
+        {"x": ["ab", "c"], "k": pa.array([7, 8], pa.int32())})
+    (out,) = kernel(iter([batch]))
+    assert out.schema.names == ["k", "a", "b", "t", "m"]
+    assert out.schema.types == [
+        pa.int32(), pa.int64(), pa.binary(), pa.timestamp("us", tz="UTC"),
+        pa.map_(pa.string(), pa.int64())]
+    assert out.to_pylist() == [
+        {"k": 7, "a": 2, "b": b"ab", "t": TS, "m": [("n", 2)]},
+        {"k": 8, "a": 1, "b": b"c", "t": TS, "m": [("n", 1)]}]
+
+
+@pytest.mark.spark
+def test_keep_column_is_cast_to_its_declared_type(spark):
+    kernel = row_kernel(lambda s: (s.upper(),), "k bigint, s string",
+                        args=("s",), keep=("k",))
+    batch = pa.RecordBatch.from_pydict(
+        {"k": pa.array([1, 2, 3], pa.int32()), "s": ["a", "b", "c"]})
+    (out,) = kernel(iter([batch]))
+    assert out.column(0).type == pa.int64()
+    assert out.column(0).to_pylist() == [1, 2, 3]
+    assert out.column(1).to_pylist() == ["A", "B", "C"]
+
+
+@pytest.mark.spark
+def test_null_and_empty_inputs_reach_the_row_function(spark):
+    seen = []
+
+    def fn(b, s):
+        seen.append((b, s))
+        return (None if b is None else len(b),)
+
+    kernel = row_kernel(fn, "id string, n int", args=("b", "s"), keep=("id",))
+    batch = pa.RecordBatch.from_pydict(
+        {"id": ["0", "1", "2"], "b": pa.array([None, b"", b"xy"], pa.binary()),
+         "s": [None, "", "é"]})
+    (out,) = kernel(iter([batch]))
+    assert seen == [(None, None), (b"", ""), (b"xy", "é")]
+    assert out.to_pylist() == [{"id": "0", "n": None}, {"id": "1", "n": 0},
+                               {"id": "2", "n": 2}]
+
+
+@pytest.mark.spark
+def test_empty_batch_yields_nothing(spark):
+    kernel = row_kernel(lambda p: (len(p),), "doc_id bigint, n int",
+                        args=("payload",), keep=("doc_id",))
+    empty = pa.RecordBatch.from_pydict(
+        {"doc_id": pa.array([], pa.int64()),
+         "payload": pa.array([], pa.binary())})
+    assert list(kernel(iter([empty]))) == []
+    assert list(kernel(iter([]))) == []
+
+
+@pytest.mark.spark
+def test_any_payload_column_is_held_to_the_byte_budget(spark, monkeypatch):
+    monkeypatch.setattr(udf, "MAX_BATCH_BYTES", 100)
+    calls = []
+
+    def fn(payload):
+        calls.append(len(payload))
+        return (len(payload),)
+
+    kernel = row_kernel(fn, "doc_id bigint, n int", args=("payload",),
+                        keep=("doc_id",))
+    sizes = [30, 30, 30, 30, 250, 10, 90, 20, 0, 99, 1]
+    batches = [
+        pa.RecordBatch.from_pydict(
+            {"doc_id": pa.array(range(lo, hi), pa.int64()),
+             "payload": [b"p" * n for n in sizes[lo:hi]]})
+        for lo, hi in ((0, 7), (7, 11))]
+    out = list(kernel(iter(batches)))
+    per_call = [b.column(1).to_pylist() for b in out]
+    assert per_call == [[30, 30, 30], [30], [250], [10, 90], [20, 0],
+                        [99, 1]]
+    assert all(sum(c) <= 100 or len(c) == 1 for c in per_call)
+    # row order survives the slicing
+    assert [i for b in out for i in b.column(0).to_pylist()] == list(range(11))
+    assert calls == sizes
+
+
+@pytest.mark.spark
+def test_map_rows_in_spark_keeps_order_and_types(spark):
+    df = spark.range(0, 50, 1, 2).selectExpr(
+        "cast(id as int) as k",
+        "case when id % 7 = 0 then null else repeat('a', cast(id as int)) "
+        "end as s")
+    out = map_rows(df, lambda s: (None if s is None else len(s),),
+                   "k bigint, n int", args=("s",), keep=("k",))
+    assert out.schema.simpleString() == "struct<k:bigint,n:int>"
+    rows = out.collect()
+    assert [r.k for r in rows] == list(range(50))
+    assert [r.n for r in rows] == [None if i % 7 == 0 else i
+                                   for i in range(50)]
 
 
 # ---------------------------------------------------------------------------
