@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from htmlcleanup_spark.functions.pin import pin
 from htmlcleanup_spark.functions.text import (
     fingerprint,
     lang_id,
@@ -108,7 +109,7 @@ def _phase_pin(df: DataFrame) -> DataFrame:
     untouched.
     """
     n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n).localCheckpoint(eager=True)
+    return pin(df.repartition(n), eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -164,8 +165,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fused docs->pairs plan: ONE shuffle total (the band-bucket
-    # self-join; minhash_wide is a pure projection); same semantics as
-    # lsh_candidate_pairs(minhash_signatures(df)) and the same oracle.
+    # self-join; minhash_wide is a pure projection); the oracle bands the
+    # rows-format minhash_signatures.
     return dedup.minhash_lsh_pairs(_docs(spark, sf_dir))
 
 
@@ -179,22 +180,14 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, pos).  Scale note: paragraph explosion multiplies rows, not
     shingle bytes; hot boilerplate paragraphs are capped by
     max_bucket_size (operator docstring) — not needed at this sf."""
+    from htmlcleanup_spark.functions.text import chunk_spans
     from htmlcleanup_spark.operators.dedup import paragraph_minhash_pairs
 
-    d = _docs(spark, sf_dir)
-    ws = F.split(F.col("text"), " ")
-    chunked = d.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.sequence(
-                    F.lit(0), ((F.size(ws) - F.lit(1)) / 12).cast("int")
-                ),
-                lambda i: F.concat_ws(" ", F.slice(ws, i * 12 + 1, 12)),
-            ),
-        ).alias("text"),
-    )
+    # ceil(n / 12) disjoint chunks, the oracle's generate_series(0, (n-1)//12)
+    chunks = chunk_spans("_ws", chunk_tokens=12, stride=12).getField("chunk")
+    chunked = _docs(spark, sf_dir).select(
+        "doc_id", F.split(F.col("text"), " ").alias("_ws")
+    ).select("doc_id", F.concat_ws("\n", chunks).alias("text"))
     return paragraph_minhash_pairs(chunked)
 
 

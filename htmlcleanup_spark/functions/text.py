@@ -16,6 +16,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .pin import pin
 from .udf import map_rows
 
 # Per-language stopword marker sets (top public stopwords) for the
@@ -532,9 +533,7 @@ def tfidf_top_terms(df, text_col: str = "text", id_col: str = "doc_id",
     # frequency) — the former separate words.groupBy(term, id) pass
     # re-exploded and re-shuffled the whole token stream for a table tf
     # already determines.
-    tf = words.groupBy(id_col, "_w").agg(
-        F.count("*").alias("_tf")
-    ).localCheckpoint(eager=False)
+    tf = pin(words.groupBy(id_col, "_w").agg(F.count("*").alias("_tf")))
     dfx = tf.groupBy("_w").agg(F.count("*").alias("_df"))
     n_docs = df.agg(F.count("*").cast("double").alias("_nd"))
     scored = (

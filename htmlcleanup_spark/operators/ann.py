@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..functions.pin import pin
+
 
 def _cosine_np_udf():
     """Arrow-vectorized cosine (numpy) — the hot path.
@@ -875,16 +877,16 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.80,
     :func:`ivf_centroids_kmeans` for balance; the md5-sample quantizer
     here keeps the whole path SQL-oracle-expressible.
 
-    The assigned frame is pinned (localCheckpoint) because BOTH sides of
+    The assigned frame is pinned because BOTH sides of
     the self-join read it — unpinned, Spark re-runs the assignment UDF
     per side.
     """
     cents = _quantizer(embeddings, quantizer, n_clusters, id_col, vec_col)
-    assigned = embeddings.select(
+    assigned = pin(embeddings.select(
         F.col(id_col), F.col(vec_col),
         F.element_at(_assign_udf(cents, 1)(F.col(vec_col)), 1)
         .alias("list_id"),
-    ).localCheckpoint(eager=False)
+    ))
     a = assigned.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("query_vec"),

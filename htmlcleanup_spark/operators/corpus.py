@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin
+
 __all__ = ["c4_filter", "sentence_split", "quality_classifier",
            "deterministic_shuffle", "bpe_pair_counts",
            "doc_line_dedup", "learn_bpe", "apply_bpe",
@@ -254,10 +256,9 @@ def learn_bpe(df: DataFrame, text_col: str = "text", n_merges: int = 8,
     sym = F.concat(
         F.lit(" "), F.array_join(F.split(F.col("w"), ""), "  "), F.lit(" ")
     )
-    # lazy cut: each round's argmax collect is the first consumer of the
-    # current symbol table and materializes its blocks, so an eager cut
-    # would only add a blocking job per merge round
-    cur = wc.select(sym.alias("s"), "cnt").localCheckpoint(eager=False)
+    # each round's argmax collect is the first consumer of the current
+    # symbol table, so the lazy cut adds no job per merge round
+    cur = pin(wc.select(sym.alias("s"), "cnt"))
     pair_struct = F.expr(
         "transform(sequence(1, size(_t) - 1),"
         " i -> struct(_t[i-1] AS l, _t[i] AS r))"
@@ -277,14 +278,14 @@ def learn_bpe(df: DataFrame, text_col: str = "text", n_merges: int = 8,
             break
         l, r, c = top[0]["l"], top[0]["r"], int(top[0]["c"])
         merges.append((step, l, r, l + r, c))
-        cur = cur.select(
+        cur = pin(cur.select(
             F.replace(
                 F.col("s"),
                 F.lit(" %s  %s " % (l, r)),
                 F.lit(" %s%s " % (l, r)),
             ).alias("s"),
             "cnt",
-        ).localCheckpoint(eager=False)
+        ))
     return spark.createDataFrame(
         merges,
         "step int, l string, r string, merged string, pair_count long",

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pin import pin
+from ..functions.text import rolling_fingerprints
 from ..functions.udf import map_rows
 
 
@@ -42,28 +44,6 @@ def _drop_hot_buckets(banded: DataFrame, keys: list[str],
         .select(*keys)
     )
     return banded.join(hot, keys, "left_anti")
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize-once for a DataFrame consumed by several branches
-    (self-joins recompute the whole upstream lineage per side otherwise).
-
-    localCheckpoint instead of persist(): persist registers the plan in the
-    CacheManager, which holds a strong reference until an explicit
-    unpersist() that a lazily-returned operator has no place to call — in a
-    long-lived session those entries accumulate.  A localCheckpoint's blocks
-    are tracked per-RDD by the ContextCleaner and freed when the consumer
-    DataFrame is garbage-collected.  eager=False keeps the operator lazy.
-
-    Fault-tolerance trade: localCheckpoint blocks live on executors
-    unreplicated, so losing an executor fails the consuming job (Spark
-    recomputes nothing — lineage was truncated).  For these SINGLE-job
-    pins that is the same blast radius as losing a shuffle map output
-    (the job retries); it is only iterative multi-job flows that need the
-    reliable variant — connected_components takes ``checkpoint_dir`` for
-    exactly that.
-    """
-    return df.localCheckpoint(eager=False)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -187,42 +167,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     ).select(id_col, "jh.hash_id", "jh.minhash")
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        bands: int = 4, rows_per_band: int = 2,
-                        max_bucket_size: int | None = None) -> DataFrame:
-    """Band-bucket join: docs agreeing on all rows of any band.
-
-    signatures: output of minhash_signatures with num_hashes =
-    bands * rows_per_band.  Returns distinct (id_a, id_b) with id_a < id_b.
-    ``max_bucket_size`` caps the m^2 hot-bucket tail (_drop_hot_buckets).
-    """
-    banded = (
-        signatures.withColumn(
-            "band", (F.col("hash_id") / rows_per_band).cast("int")
-        )
-        .groupBy(id_col, "band")
-        .agg(F.md5(F.concat_ws("|", F.sort_array(F.collect_list("minhash")))).alias("band_key"))
-    )
-    if max_bucket_size is not None:
-        banded = _drop_hot_buckets(banded, ["band", "band_key"],
-                                   max_bucket_size)
-    # Pin: both sides of the self-join read this; without it Spark
-    # recomputes the whole shingle->minhash lineage twice.
-    banded = _pin(banded)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), "band", "band_key"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), "band", "band_key"
-    )
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def _banded_from_wide(wide: DataFrame, id_col: str, bands: int,
                       rows_per_band: int) -> DataFrame:
     """Map-side band keys from a wide signature: (id, band, band_key),
@@ -256,15 +200,17 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       max_bucket_size: int | None = None) -> DataFrame:
     """Fused MinHash+LSH candidate pairs straight from documents.
 
-    Same result as ``lsh_candidate_pairs(minhash_signatures(df))`` but band
+    Returns distinct (id_a, id_b) with id_a < id_b: docs whose signatures
+    (``bands * rows_per_band`` hashes) agree on all rows of any band.  Band
     keys are computed map-side from the wide signature (sorted rows within
     each band, matching the oracle's ORDER BY minhash), and minhash_wide
     itself is a pure projection, so the whole docs -> candidate-pairs
     pipeline shuffles exactly ONCE at any scale: the band-bucket self-join
-    (vs four for the unfused rows-format plan).  ``max_bucket_size`` caps
-    the m^2 hot-bucket tail (_drop_hot_buckets) — the dial to set at
-    10^12 docs, where one degenerate band key (e.g. boilerplate-only
-    pages) otherwise emits a near-cartesian pair explosion.
+    (vs four for a plan banding the rows-format minhash_signatures).
+    ``max_bucket_size`` caps the m^2 hot-bucket tail (_drop_hot_buckets) —
+    the dial to set at 10^12 docs, where one degenerate band key (e.g.
+    boilerplate-only pages) otherwise emits a near-cartesian pair
+    explosion.
     """
     wide = minhash_wide(df, text_col, id_col, k,
                         num_hashes=bands * rows_per_band)
@@ -272,7 +218,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     if max_bucket_size is not None:
         banded = _drop_hot_buckets(banded, ["band", "band_key"],
                                    max_bucket_size)
-    banded = _pin(banded)
+    banded = pin(banded)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
     return (
@@ -384,7 +330,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     # split/transform/explode construction per consumer (pinning after the
     # anti-join paid a second full shingle-build pass just to compute the
     # hot set).
-    sh = _pin(sh)
+    sh = pin(sh)
     if max_shingle_df is not None:
         # Anti-join against the HOT set, not semi-join against the rare
         # set: hot shingles (df > cap) are the Zipf head — a small table —
@@ -493,7 +439,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
             .select("fp")
         )
         sel = sel.join(hot, "fp", "left_anti")
-    sel = _pin(sel)  # consumed by sizes + both self-join sides
+    sel = pin(sel)  # consumed by sizes + both self-join sides
     sizes = sel.groupBy(id_col).agg(F.count("*").alias("n_fp"))
     a = sel.select(F.col(id_col).alias("id_a"), "fp")
     b = sel.select(F.col(id_col).alias("id_b"), "fp")
@@ -640,43 +586,37 @@ def connected_components(pairs: DataFrame, max_iterations: int = 25,
     path-shaped components (naive min-label propagation needs O(diameter)).
     Each round's edge set is checkpointed: iterative plans otherwise grow
     lineage exponentially and re-execute every prior round.  The default
-    ``localCheckpoint`` stores blocks on executors with NO fault
-    tolerance — a lost executor kills the job mid-iteration, which is fine
-    on local[n] but not on a 1000-executor cluster; pass
-    ``checkpoint_dir`` (a reliable path: HDFS/S3) to use true
-    ``checkpoint()`` there, trading one write+read of the edge set per
-    round for executor-loss survival.  The convergence probe is ONE
+    local cut (functions.pin) does not survive a lost executor, which is
+    fine on local[n] but not on a 1000-executor cluster; pass
+    ``checkpoint_dir`` (a reliable path: HDFS/S3) for reliable cuts there,
+    trading one write+read of the edge set per round for executor-loss
+    survival.  The convergence probe is ONE
     aggregation job per round (edge count + order-independent xxhash64
     sum); a colliding non-equal edge set (2^-64) would stop one round
     early — acceptable for any dedup use, and the star-forest invariant
     below still yields valid labels because the final groupBy takes the
     minimum root per node.
     """
-    # Lazy cuts: every round's _digest convergence probe is the first
-    # consumer of the just-checkpointed edge set and materializes its
-    # blocks, so an eager cut would only add a second blocking job per
-    # round that repeats the same work.
-    if checkpoint_dir is not None:
+    # every round's _digest convergence probe is the first consumer of the
+    # just-cut edge set, so the lazy cut adds no job per round
+    reliable = checkpoint_dir is not None
+    if reliable:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-    else:
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
-    e = _ckpt(
+    e = pin(
         pairs.select(
             F.least("id_a", "id_b").alias("u"),
             F.greatest("id_a", "id_b").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        reliable=reliable,
     )
-    nodes = _ckpt(
+    nodes = pin(
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
-        .distinct()
+        .distinct(),
+        reliable=reliable,
     )
     def _digest(edges: DataFrame):
         row = edges.agg(
@@ -719,7 +659,7 @@ def connected_components(pairs: DataFrame, max_iterations: int = 25,
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        new_e = _ckpt(new_e)
+        new_e = pin(new_e, reliable=reliable)
         cur = _digest(new_e)
         if cur == prev:
             e = new_e
@@ -780,13 +720,11 @@ def line_dedup(df: DataFrame, id_col: str = "url", text_col: str = "text",
     - the corpus doc count is a 1-row aggregate cross-joined in (the SQL
       oracle's scalar subquery twin).
     """
-    df = _pin(df.select(id_col, text_col))  # consumed by 4 branches:
-    # without the pin each branch re-runs the whole upstream lineage
-    # (for the post-extraction use that is the cascade itself, 4x)
-    # second pin: the LINE stream itself has 3 consumers (the df count,
-    # the keep anti-join, the dropped semi-join) — pinning it saves two
-    # further split/posexplode/md5 passes over every document
-    lines = _pin(
+    # consumed by 4 branches; post-extraction, the upstream is the cascade
+    df = pin(df.select(id_col, text_col))
+    # the LINE stream has 3 consumers (the df count, the keep anti-join,
+    # the dropped semi-join): one split/posexplode/md5 pass, not three
+    lines = pin(
         df.select(
             F.col(id_col).alias("_id"),
             F.posexplode(F.split(F.col(text_col), "\n"))
@@ -912,24 +850,14 @@ def remove_repeated_spans(df: DataFrame, k: int = 8, min_count: int = 2,
     """
     import numpy as np
 
-    ws = F.split(F.col(text_col), " ")
-    n = F.size(ws)
-    # filter BEFORE the projection: sequence(0, n-k) must never see n < k
-    # (Spark would emit a DESCENDING sequence for a negative end).
     # The gram stream feeds BOTH the occurrence count and the semi-join
-    # probe side — pin it so the (interpreted-HOF) gram construction runs
-    # once, not once per consumer (measured 3x on the sf0.1 corpus).
-    grams = df.filter(n >= k).select(
+    # probe side, so the (interpreted-HOF) gram construction is pinned
+    # (measured 3x on the sf0.1 corpus unpinned).  _words drops docs with
+    # n < k words, so rolling_fingerprints' greatest() clamp never fires.
+    grams = pin(_words(df, text_col, id_col, k).select(
         F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n - k),
-                lambda i: F.md5(
-                    F.concat_ws(" ", F.slice(ws, i + 1, k))
-                ),
-            )
-        ).alias("s", "g"),
-    ).localCheckpoint(eager=False)
+        F.posexplode(rolling_fingerprints("_ws", window=k)).alias("s", "g"),
+    ))
     repeated = (
         grams.groupBy("g")
         .agg(F.count("*").alias("_c"))
@@ -1049,13 +977,13 @@ def host_line_dedup(df: DataFrame, id_col: str = "url",
     from htmlcleanup_spark.functions.url import url_host
 
     host = F.col(host_col) if host_col else url_host(id_col)
-    base = _pin(df.select(
+    base = pin(df.select(
         F.col(id_col), host.alias("_host"), F.col(text_col)
     ))  # consumed by the page count and (via lines) three more branches
 
     # line-stream pin: three consumers (df count, keep anti-join, drop
     # semi-join) would otherwise re-split and re-hash every page's lines
-    lines = _pin(
+    lines = pin(
         base.select(
             F.col(id_col).alias("_id"), "_host",
             F.posexplode(F.split(F.col(text_col), "\n"))
@@ -1264,12 +1192,10 @@ def lsh_recall_report(df: DataFrame, planted: DataFrame,
     candidate discipline); LSH detection is the production
     minhash_lsh_pairs plan itself; the final report is one
     n_bins-row aggregate."""
-    # pin: the sizes aggregate and BOTH per-side prunes read the shingle
-    # stream — without the pin the split/explode construction runs three
-    # times (the repo-wide multi-consumer rule)
-    sh = _pin(shingles(df, text_col, id_col, k))
+    # the sizes aggregate and BOTH per-side prunes read the shingle stream
+    sh = pin(shingles(df, text_col, id_col, k))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("_ns"))
-    pl = _pin(planted.select("id_a", "id_b"))
+    pl = pin(planted.select("id_a", "id_b"))
     sha = sh.select(F.col(id_col).alias("id_a"), "shingle").join(
         F.broadcast(pl.select("id_a").distinct()), "id_a", "left_semi"
     )

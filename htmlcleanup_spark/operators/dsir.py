@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pin import pin
+
 __all__ = ["hashed_gram_counts", "dsir_logratio", "dsir_weights",
            "dsir_select"]
 
@@ -128,14 +130,12 @@ def dsir_logratio(raw_df: DataFrame, target_df: DataFrame,
     ``raw_buckets``: an already-computed (bucket, cnt) table for the raw
     corpus (dsir_weights derives it from the per-doc counts it needs
     anyway, saving a full gram-hash pass); None computes it here."""
-    # each count table feeds BOTH its total aggregate and the ratio join —
-    # pin them (<= B rows) so the corpus gram scan runs once per corpus,
-    # not once per consumer (the repo-wide multi-consumer-subplan rule)
+    # each count table (<= B rows) feeds BOTH its total aggregate and the
+    # ratio join: one corpus gram scan per corpus
     if raw_buckets is None:
         raw_buckets = _corpus_buckets(raw_df, text_col, n_buckets, salt)
-    traw = raw_buckets.localCheckpoint(eager=False)
-    ttgt = _corpus_buckets(target_df, text_col, n_buckets, salt) \
-        .localCheckpoint(eager=False)
+    traw = pin(raw_buckets)
+    ttgt = pin(_corpus_buckets(target_df, text_col, n_buckets, salt))
     tot_raw = traw.agg(F.sum("cnt").cast("double").alias("_tq"))
     tot_tgt = ttgt.agg(F.sum("cnt").cast("double").alias("_tp"))
     b = float(n_buckets)
@@ -177,9 +177,7 @@ def dsir_weights(raw_df: DataFrame, target_df: DataFrame,
     the corpus count), so the raw corpus' gram-hash stream — the
     heaviest stage of the op — runs ONCE instead of twice; only the
     (smaller) target corpus pays its own pass."""
-    counts = hashed_gram_counts(
-        raw_df, text_col, id_col, n_buckets, salt
-    ).localCheckpoint(eager=False)
+    counts = pin(hashed_gram_counts(raw_df, text_col, id_col, n_buckets, salt))
     raw_buckets = counts.groupBy("bucket").agg(
         F.sum("cnt").alias("cnt")
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin
+
 __all__ = ["inverted_index", "phrase_scores", "bm25_topk"]
 
 
@@ -224,9 +226,7 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     # stream feeds both the df_t and tf aggregations — one token-stream
     # scan instead of two, and what materializes is only the postings
     # that survive the broadcast term cut (scale-safe by construction)
-    hit = toks.join(F.broadcast(uniq_terms), "term").localCheckpoint(
-        eager=False
-    )
+    hit = pin(toks.join(F.broadcast(uniq_terms), "term"))
 
     # document frequency of queried terms only
     df_t = (

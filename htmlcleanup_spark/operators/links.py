@@ -33,6 +33,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin
+
 OUTLINKS_DDL = (
     "src_doc bigint, seq int, href string, url string, anchor string, "
     "host string, src_host string"
@@ -273,32 +275,27 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iterations: int = 5,
     (crossJoin of a 1-row frame — no driver action), and a lazy
     checkpoint to cut lineage (materialized by the next iteration's
     dangling build — one job per iteration).  N is computed once (``nodes.count()``).
+    The lazy cut assumes AQE: without it, the dangling broadcast bounds a
+    whole iteration by ``spark.sql.broadcastTimeout`` (functions.pin).
     ``checkpoint_dir``: same contract as connected_components — default
     localCheckpoint (fast, executor-local, no fault tolerance), or true
     reliable checkpoint() to the given HDFS/S3 path for cluster runs.
     """
-    if checkpoint_dir is not None:
+    reliable = checkpoint_dir is not None
+    if reliable:
         nodes.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-    else:
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
 
     # nodes/edges/outdeg are read EVERY iteration — pin them once so the
     # loop never recomputes the upstream plan (for a harvested graph that
     # upstream is the whole page-parse chain: 3 reads/iter x k iters of
-    # re-extraction otherwise).  All cuts are LAZY (eager=False): each
-    # iteration's dangling-mass broadcast build is the first consumer of
-    # the previous ranks and materializes its blocks as a side effect, so
-    # the loop runs ONE job per iteration instead of two — an eager cut
-    # added a dedicated blocking materialization job whose work the next
-    # dangling job repeated as block reads anyway.
-    nodes = _cut(nodes.select("doc_id"))
-    edges = _cut(edges)
+    # re-extraction otherwise).  Each iteration's dangling-mass broadcast
+    # build is the first consumer of the previous ranks, so with lazy cuts
+    # the loop runs ONE job per iteration.
+    nodes = pin(nodes.select("doc_id"), reliable=reliable)
+    edges = pin(edges, reliable=reliable)
     n_nodes = nodes.count()
-    outdeg = _cut(edges.groupBy("src").agg(F.count("*").alias("_od")))
+    outdeg = pin(edges.groupBy("src").agg(F.count("*").alias("_od")),
+                 reliable=reliable)
     teleport = (1.0 - damping) / n_nodes
 
     ranks = nodes.select(
@@ -334,7 +331,7 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iterations: int = 5,
                 ).alias("pr"),
             )
         )
-        ranks = _cut(ranks)
+        ranks = pin(ranks, reliable=reliable)
         src_ranks = ranks.withColumnRenamed("v", "src")
     return ranks.select(
         F.col("v").alias("doc_id"),
@@ -393,25 +390,20 @@ def hits(nodes: DataFrame, edges: DataFrame, iterations: int = 4,
     Scale: per iteration one shuffle keyed on dst (authority sum) and
     one on src (hub sum), both partial-combined; normalization is a
     1-row broadcast aggregate; a per-iteration lazy checkpoint cuts the
-    lineage (materialized by the next normalizer build).  nodes/edges are pinned once before the loop (the repo's
+    lineage (materialized by the next normalizer build; the pagerank AQE
+    note applies).  nodes/edges are pinned once before the loop (the repo's
     multi-consumer rule).  ``checkpoint_dir`` has the pagerank /
     connected_components contract: None -> localCheckpoint, path ->
     reliable checkpoint() for cluster runs.
     """
-    if checkpoint_dir is not None:
+    reliable = checkpoint_dir is not None
+    if reliable:
         nodes.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-    else:
-        def _cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
-    # LAZY cuts, same rationale as pagerank: each iteration's normalizer
-    # broadcast builds are the first consumers of the previous state and
-    # materialize its blocks, so no dedicated blocking checkpoint job.
-    nodes = _cut(nodes.select("doc_id"))
-    edges = _cut(edges)
+    # each iteration's normalizer broadcast builds are the first consumers
+    # of the previous state, so the lazy cuts add no job
+    nodes = pin(nodes.select("doc_id"), reliable=reliable)
+    edges = pin(edges, reliable=reliable)
     n_nodes = nodes.count()
 
     h = nodes.select(
@@ -455,7 +447,7 @@ def hits(nodes: DataFrame, edges: DataFrame, iterations: int = 4,
         # materialized frame (the a used inside this iteration's h
         # update keeps its shallow within-iteration lineage — only the
         # iteration boundary needs cutting, halving checkpoint jobs)
-        state = _cut(h_new.join(a, "v"))
+        state = pin(h_new.join(a, "v"), reliable=reliable)
         h = state.select("v", "h")
     return state.select(
         F.col("v").alias("doc_id"),

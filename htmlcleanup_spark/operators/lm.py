@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pin import pin
+
 
 def _words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(
@@ -82,10 +84,9 @@ def perplexity(df: DataFrame, model: DataFrame | None = None,
     """
     if model is None:
         model = unigram_model(df, text_col, id_col, vocab_size)
-    # the model feeds BOTH the totals aggregate and the broadcast join —
-    # pin it so the vocabulary shuffle is computed once, not re-derived
-    # per consumer (same single-job-pin tradeoff as operators/dedup._pin)
-    model = model.localCheckpoint(eager=False)
+    # the model feeds BOTH the totals aggregate and the broadcast join:
+    # the vocabulary shuffle runs once
+    model = pin(model)
     totals = model.agg(
         F.sum("cnt").cast("double").alias("_t"),
         F.count("*").cast("double").alias("_v"),
@@ -172,8 +173,8 @@ def bigram_perplexity(df: DataFrame, text_col: str = "text",
     joins (the multi-consumer rule)."""
     stream = _ngram_stream(df, 2, text_col, id_col)
 
-    uni = unigram_model(df, text_col, id_col).localCheckpoint(eager=False)
-    bi = bigram_model(df, text_col, id_col).localCheckpoint(eager=False)
+    uni = pin(unigram_model(df, text_col, id_col))
+    bi = pin(bigram_model(df, text_col, id_col))
     tot = uni.agg(
         F.sum("cnt").cast("double").alias("_t"),
         F.count("*").cast("double").alias("_v"),
@@ -299,12 +300,9 @@ def stupid_backoff_nll(df: DataFrame, model_df: DataFrame | None = None,
     if model_df is None:
         model_df = df
     stream = _ngram_stream(df, 3, text_col, id_col)
-    tri = trigram_model(model_df, text_col, id_col) \
-        .localCheckpoint(eager=False)
-    bi = bigram_model(model_df, text_col, id_col) \
-        .localCheckpoint(eager=False)
-    uni = unigram_model(model_df, text_col, id_col) \
-        .localCheckpoint(eager=False)
+    tri = pin(trigram_model(model_df, text_col, id_col))
+    bi = pin(bigram_model(model_df, text_col, id_col))
+    uni = pin(unigram_model(model_df, text_col, id_col))
     tot = uni.agg(
         F.sum("cnt").cast("double").alias("_t"),
         F.count("*").cast("double").alias("_v"),

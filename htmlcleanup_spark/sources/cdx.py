@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pin import pin
+
 __all__ = ["CDX_JSON_DDL", "surt_key", "parse_cdxj", "read_cdx",
            "latest_captures", "to_cdxj_lines", "fetch_plan",
            "merge_capture_indexes", "fetch_warc_ranges",
@@ -424,9 +426,7 @@ def cluster_index(captures: DataFrame, every: int = 3000,
     time; this operator keys blocks by line number, the shape the
     lookup needs.
     """
-    local = _enumerate_sorted(captures, num_ranges).localCheckpoint(
-        eager=True
-    )
+    local = pin(_enumerate_sorted(captures, num_ranges), eager=True)
 
     counts = sorted(
         (r["_pid"], r["_n"])

@@ -161,6 +161,34 @@ def test_pagerank_uniform_on_ring(spark):
     assert prs == {int(1e9 / n // 1)}
 
 
+def test_pagerank_reliable_checkpoint_identical(spark, link_corpus, tmp_path):
+    """checkpoint_dir (reliable cuts, the executor-loss-tolerant cluster
+    mode) must produce exactly the localCheckpoint result."""
+    n, df = link_corpus
+    edges = edges_from_outlinks(extract_outlinks(df))
+    nodes = df.select("doc_id")
+    local = set(pagerank(nodes, edges).collect())
+    reliable = set(
+        pagerank(nodes, edges, checkpoint_dir=str(tmp_path)).collect()
+    )
+    assert reliable == local and len(local) == n
+    assert any(tmp_path.rglob("rdd-*"))  # the cuts went to checkpoint_dir
+
+
+def test_hits_reliable_checkpoint_identical(spark, link_corpus, tmp_path):
+    from htmlcleanup_spark.operators.links import hits
+
+    n, df = link_corpus
+    edges = edges_from_outlinks(extract_outlinks(df))
+    nodes = df.select("doc_id")
+    local = set(hits(nodes, edges).collect())
+    reliable = set(
+        hits(nodes, edges, checkpoint_dir=str(tmp_path)).collect()
+    )
+    assert reliable == local and len(local) == n
+    assert any(tmp_path.rglob("rdd-*"))  # the cuts went to checkpoint_dir
+
+
 def test_edges_drop_chrome_and_self(spark, link_corpus):
     n, df = link_corpus
     edges = edges_from_outlinks(extract_outlinks(df)).collect()

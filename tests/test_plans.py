@@ -567,3 +567,41 @@ def test_phase_pin_keeps_parallelism(spark):
         pinned.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
+
+
+def _lambdas_calling_split(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` in ``plan`` whose body calls split."""
+    found, at = [], plan.find("lambdafunction(")
+    while at >= 0:
+        depth = 0
+        for end in range(at + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        if "split(" in plan[at:end + 1]:
+            found.append(plan[at:end + 1])
+        at = plan.find("lambdafunction(", at + 1)
+    return found
+
+
+@pytest.mark.parametrize("query", ["exactsubstr_dedup", "paragraph_dedup"])
+def test_window_lambdas_never_resplit_the_text(spark, monkeypatch, query):
+    """A higher-order-function lambda is interpreted with no common-
+    subexpression elimination, so a split(text) inside it re-splits the
+    whole document per window: O(len^2).  The word array must be a column
+    selected before the transform.  A pinned frame hides its plan from the
+    consumer's, so every frame passed to pin() is checked too."""
+    import __spark_entry__ as entry
+    from htmlcleanup_spark.functions.pin import pin
+    from htmlcleanup_spark.operators import dedup
+
+    plans = []
+
+    def recording_pin(df, **kw):
+        plans.append(plan_of(df))
+        return pin(df, **kw)
+
+    monkeypatch.setattr(dedup, "pin", recording_pin)
+    plans.append(plan_of(entry.queries()[query](spark, SF)))
+    assert len(plans) >= 2 and any("lambdafunction(" in p for p in plans)
+    assert [l for p in plans for l in _lambdas_calling_split(p)] == []

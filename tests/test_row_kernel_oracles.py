@@ -22,6 +22,9 @@ QUERIES = [
     "repetition_signals", "normalize_text", "pagerank",
     "training_corpus_v2", "training_corpus_v3", "exactsubstr_dedup",
     "audio_meta", "video_meta", "exif_meta",
+    # not a row kernel, but its chunking transform shares exactsubstr_dedup's
+    # split-once-then-slice rewrite
+    "paragraph_dedup",
 ]
 
 
